@@ -6,8 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from verde_spark.functions.cells import cell_encode
-from verde_spark.functions.text import geotag_lat, geotag_lon, quality_score
-from verde_spark.sources.pages import synthesize_pages
+from verde_spark.functions.text import quality_score
+from verde_spark.sources.pages import geotag_lat, geotag_lon, synthesize_pages
 from verde_spark.streaming import (
     run_to_memory,
     stream_pages,
@@ -133,7 +133,8 @@ def test_stream_to_tile_store_upsert_and_resume(spark, tmp_path):
     )
     # batch oracle over ALL data
     from verde_spark.functions.cells import cell_encode
-    from verde_spark.functions.text import geotag_lat, geotag_lon, quality_score
+    from verde_spark.functions.text import quality_score
+    from verde_spark.sources.pages import geotag_lat, geotag_lon
 
     pages = spark.read.parquet(pages_dir)
     tagged = pages.withColumn("lon", geotag_lon("text")).withColumn("lat", geotag_lat("text"))

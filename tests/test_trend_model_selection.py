@@ -263,6 +263,19 @@ def test_kfold_rows_contiguous_scale_path_matches_exact(spark):
         )
 
 
+def test_kfold_rows_contiguous_scale_path_rejects_duplicate_ids(spark):
+    """The chunked shuffle=False path checks index_col uniqueness like the
+    exact path: a duplicated id would shift every later fold position."""
+    from verde_spark.model_selection import KFoldRows
+
+    df = spark.createDataFrame(
+        [(int(i), float(i)) for i in range(20)] + [(7, 99.0)], "id long, x double"
+    )
+    cv = KFoldRows(n_splits=2, shuffle=False, index_col="id", exact_threshold=0)
+    with pytest.raises(ValueError, match="'id' is not unique"):
+        next(cv.split(df))
+
+
 def test_train_test_split_partial_fractions_discard_remainder(spark):
     """train_size + test_size < 1 discards the remainder (review r5:
     randomSplit normalizes weights, silently inflating both splits)."""

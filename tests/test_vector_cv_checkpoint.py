@@ -387,6 +387,35 @@ def test_checkpoint_empty_stage_output_tile_completes(spark, tmp_path):
     assert (man["rows_out"] == 0).all()
 
 
+def test_checkpoint_corrupt_part_files_raise(spark, tmp_path):
+    """A corrupt manifest or data part file is an error, never an empty
+    read: it must not look like "no tiles done" or "zero rows"."""
+    import glob
+    import os
+
+    def corrupt(pattern):
+        files = glob.glob(pattern)
+        assert files
+        for f in files:
+            with open(f, "wb") as fh:
+                fh.write(b"not parquet")
+
+    one_tile = pd.DataFrame({"tile": [0], "x": [1.0]})
+    bad_manifest = TileCheckpoint(str(tmp_path / "bad_manifest"))
+    bad_manifest.write(spark.createDataFrame(one_tile))
+    assert [r["tile"] for r in bad_manifest.completed_tiles(spark).collect()] == [0]
+    corrupt(os.path.join(bad_manifest.manifest_path, "*.parquet"))
+    with pytest.raises(Exception):
+        bad_manifest.completed_tiles(spark).collect()
+
+    bad_data = TileCheckpoint(str(tmp_path / "bad_data"))
+    bad_data.write(spark.createDataFrame(one_tile))
+    assert bad_data.load(spark).count() == 1
+    corrupt(os.path.join(bad_data.data_path, "attempt=*", "tile=0", "*.parquet"))
+    with pytest.raises(Exception):
+        bad_data.load(spark).collect()
+
+
 def test_checkpoint_load_without_manifest_is_empty(spark, tmp_path):
     """Orphan-attempt-only checkpoint (crash before the FIRST manifest
     append): load() returns zero committed rows, not an AttributeError

@@ -1,5 +1,5 @@
 """Web-scale layer: pages table, geotag parse, cell index, dedup,
-similarity, multimodal plumbing, grid IO."""
+similarity, grid IO and the grid CLI job."""
 
 import numpy as np
 import numpy.testing as npt
@@ -18,8 +18,6 @@ from verde_spark.functions.cells import (
 from verde_spark.functions.text import (
     bpe_ish_token_count,
     fingerprint,
-    geotag_lat,
-    geotag_lon,
     lang_id_expr,
     quality_score,
     shingles,
@@ -33,9 +31,8 @@ from verde_spark.operators.dedup import (
     lsh_candidate_pairs,
     simhash_near_duplicates,
 )
-from verde_spark.operators.multimodal import extract_features, payload_metadata
 from verde_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
-from verde_spark.sources.pages import geotagged, synthesize_pages
+from verde_spark.sources.pages import geotag_lat, geotag_lon, geotagged, synthesize_pages
 from verde_spark.sources.grid_io import grid_to_table, load_surfer, table_to_grid
 
 
@@ -368,24 +365,6 @@ def test_lsh_bucketed_topk_recall(spark):
     assert (merged["neighbor_id_a"] == merged["query_id"]).all()
 
 
-# --- multimodal -------------------------------------------------------------------
-
-
-def test_multimodal_plumbing(spark):
-    pages = synthesize_pages(spark, 50, seed=3)
-    feats = extract_features(pages, payload_col="html", feature_dim=4)
-    pdf = feats.toPandas()
-    assert all(len(v) == 4 for v in pdf["features"])
-    # deterministic: same payload → same features
-    again = extract_features(pages, payload_col="html", feature_dim=4).toPandas()
-    a = np.stack(pdf.sort_values("url")["features"].to_numpy())
-    b = np.stack(again.sort_values("url")["features"].to_numpy())
-    npt.assert_array_equal(a, b)
-    meta = payload_metadata(pages).toPandas()
-    assert (meta["payload_kind"] == "html").all()
-    assert (meta["payload_bytes"] > 0).all()
-
-
 # --- grid io ------------------------------------------------------------------------
 
 
@@ -493,29 +472,6 @@ def test_embedding_near_dup(spark):
     assert dropped == {j for _, j in want}
 
 
-def test_multimodal_resize_and_frames(spark):
-    # resize: real schema/batch plumbing, stubbed decode; deterministic
-    from verde_spark.operators.multimodal import resize_images, sample_frames
-
-    pages = synthesize_pages(spark, 20)
-    resized = resize_images(pages, width=4, height=4, source_size=16)
-    pdf = resized.select("url", "pixels", "out_width", "out_height", "channels").toPandas()
-    assert len(pdf) == 20
-    assert (pdf["out_width"] == 4).all() and (pdf["channels"] == 3).all()
-    assert all(len(p) == 4 * 4 * 3 for p in pdf["pixels"])
-    # deterministic: same payload -> same pixels
-    pdf2 = resize_images(pages, width=4, height=4, source_size=16).select("url", "pixels").toPandas()
-    m1 = dict(zip(pdf["url"], pdf["pixels"]))
-    m2 = dict(zip(pdf2["url"], pdf2["pixels"]))
-    assert m1 == m2
-
-    frames = sample_frames(pages, num_frames=3, id_cols=["url"])
-    fdf = frames.toPandas()
-    assert len(fdf) == 60  # 20 pages x 3 frames
-    assert set(fdf["frame_idx"]) == {0, 1, 2}
-    assert fdf.groupby("url").size().eq(3).all()
-
-
 def test_geotag_malformed_inputs(spark):
     # malformed / missing geotags yield nulls, never errors or fake coords
     import pandas as pd
@@ -564,22 +520,6 @@ def test_embedding_near_dup_null_first_row_still_finds_pairs(spark):
     ).coalesce(1)  # one partition: the NULL row is scanned first
     out = embedding_near_duplicate_pairs(df, threshold=0.99).toPandas()
     assert set(zip(out["id_a"], out["id_b"])) == {(1, 2)}
-
-
-def test_sample_frames_preserves_id_dtype(spark):
-    # ids must come through as int64, not float (the iterrows upcast trap)
-    import pandas as pd
-
-    from verde_spark.operators.multimodal import sample_frames
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "payload": [b"abc", b"def"]})
-    )
-    out = sample_frames(df, payload_col="payload", num_frames=2, id_cols=["doc_id"])
-    assert dict(out.dtypes)["doc_id"] == "bigint"
-    got = out.toPandas()
-    assert sorted(got["doc_id"].unique().tolist()) == [1, 2]
-    assert len(got) == 4
 
 
 def test_connected_components_chain_star_and_pointer_jumping(spark):
@@ -836,60 +776,6 @@ def test_hash_split_stability_and_no_shuffle(spark):
     out.unpersist()
 
 
-def test_resize_raw_images_exact_values(spark):
-    """The raw-bitmap path is REAL end-to-end: known gradient image in,
-    exact block means out."""
-    from verde_spark.operators.multimodal import resize_raw_images
-
-    h, w, c = 16, 16, 3
-    img = np.arange(h * w * c, dtype=np.uint64).reshape(h, w, c) % 256
-    img = img.astype(np.uint8)
-    rows = [
-        (1, img.tobytes(), w, h, c),
-        (2, b"too short", w, h, c),  # malformed → nulls
-        (3, None, w, h, c),
-    ]
-    df = spark.createDataFrame(
-        rows, "id long, payload binary, width int, height int, channels int"
-    )
-    out = resize_raw_images(df, out_width=4, out_height=4).orderBy("id").toPandas()
-    got = np.frombuffer(out["pixels"][0], dtype=np.uint8).reshape(4, 4, 3)
-    want = img.reshape(4, 4, 4, 4, 3).mean(axis=(1, 3)).astype(np.uint8)
-    npt.assert_array_equal(got, want)
-    assert out["pixels"][1] is None and out["pixels"][2] is None
-    assert out["out_width"][0] == 4 and pd.isna(out["out_width"][1])
-    # smaller than the output grid → null, not a reshape task failure
-    # (review r5: the contract is nulls, never task-killing exceptions)
-    tiny = np.zeros((4, 16, 3), dtype=np.uint8)
-    small_df = spark.createDataFrame(
-        [(9, tiny.tobytes(), 16, 4, 3)],
-        "id long, payload binary, width int, height int, channels int",
-    )
-    got2 = resize_raw_images(small_df, out_width=8, out_height=8).toPandas()
-    assert got2["pixels"][0] is None
-
-
-def test_pcm_band_energies_pure_tone(spark):
-    """A pure tone's energy must land in the band containing its
-    frequency — real DSP, no stub."""
-    from verde_spark.operators.multimodal import pcm_band_energies
-
-    n = 4096
-    t = np.arange(n)
-    def tone(cycles):
-        return (10000 * np.sin(2 * np.pi * cycles * t / n)).astype("<i2").tobytes()
-
-    # cycles 100 → bin 100 of 2048 → band 0 of 8; cycles 1900 → band 7
-    rows = [(1, tone(100)), (2, tone(1900)), (3, None), (4, b"\x01")]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = pcm_band_energies(df, n_bands=8).orderBy("id").toPandas()
-    e1 = np.array(out["band_energies"][0])
-    e2 = np.array(out["band_energies"][1])
-    assert e1.argmax() == 0 and e2.argmax() == 7
-    assert len(e1) == 8
-    assert out["band_energies"][2] is None and out["band_energies"][3] is None
-
-
 def test_mask_to_runs(spark):
     from verde_spark.sources.grid_io import mask_to_runs
 
@@ -976,37 +862,6 @@ def test_mask_to_runs_random_vs_naive(spark, seed):
             else:
                 ix += 1
     assert got == want
-
-
-def test_main_entrypoint_dedup_and_ivf_jobs(spark, tmp_path, capsys):
-    """--job dedup and --job ivf-index through the same spark-submit
-    entrypoint (main() invoked in-process against the live session)."""
-    import json
-
-    from verde_spark.__main__ import main
-
-    # dedup: plant exact duplicates by doubling a synthesized table
-    from verde_spark.sources.pages import synthesize_pages
-
-    src = str(tmp_path / "pages")
-    p = synthesize_pages(spark, 100, seed=9)
-    p.unionByName(p).write.parquet(src)  # every text exactly duplicated
-    out = str(tmp_path / "deduped")
-    assert main(["--input", src, "--job", "dedup", "--output", out]) == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["rows_in"] == 200 and stats["rows_out"] == 100
-    assert spark.read.parquet(out).count() == 100
-
-    # ivf-index over the driver embeddings table
-    out2 = str(tmp_path / "ivf")
-    assert main([
-        "--input", "/root/testdata/sf0.01/embeddings.parquet",
-        "--job", "ivf-index", "--centroids", "4", "--output", out2,
-    ]) == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["n_centroids"] == 4 and stats["rows"] == 500
-    back = spark.read.parquet(out2)
-    assert "cluster" in back.columns
 
 
 def test_lsh_multiprobe_improves_recall(spark):
@@ -1373,34 +1228,6 @@ def test_clean_corpus_recipe(spark):
     assert sorted(r["text"] for r in out2.collect()) == texts
 
 
-def test_main_entrypoint_clean_job(spark, tmp_path, capsys):
-    """--job clean runs the composed front door through spark-submit's
-    entrypoint: recrawled url variants collapse and quality columns ride
-    along in the output parquet."""
-    import json as _json
-
-    from verde_spark.__main__ import main
-
-    src = str(tmp_path / "pages_in")
-    pages = synthesize_pages(spark, 400)
-    # every page recrawled once under a tracking-param variant
-    variant = pages.withColumn(
-        "url", F.concat(F.col("url"), F.lit("?utm_source=x"))
-    ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
-    pages.unionByName(variant).write.parquet(src)
-
-    out = str(tmp_path / "cleaned")
-    rc = main(["--input", src, "--output", out, "--job", "clean",
-               "--threshold", "1.0", "--min-tokens", "3"])
-    assert rc == 0
-    metrics = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert metrics["rows_in"] == 800 and metrics["rows_out"] == 400
-    cleaned = spark.read.parquet(out)
-    assert {"n_tokens", "sw_ratio", "rep_ratio", "quality"} <= set(cleaned.columns)
-    # latest crawl (the variant, +1 day) won every group
-    assert cleaned.filter(~F.col("url").contains("utm_source")).count() == 0
-
-
 def test_shingles_null_text(spark):
     # Pinned contract (ADVICE r3): NULL text -> NULL gram array (not []),
     # so null docs never gain near-dup candidacy; empty text -> [].
@@ -1467,41 +1294,6 @@ def test_corpus_report(spark):
     )
     assert "Expand" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_main_entrypoint_clean_snapshot_store(spark, tmp_path, capsys):
-    """--job clean --snapshot-store commits each run as a SnapshotStore
-    version: two runs append two snapshots, time travel sees both states,
-    and the metrics line reports version + table totals from the manifest."""
-    import json as _json
-
-    from verde_spark.__main__ import main
-    from verde_spark.sources.snapshots import SnapshotStore
-
-    src = str(tmp_path / "pages_in")
-    synthesize_pages(spark, 300).write.parquet(src)
-    out = str(tmp_path / "corpus_store")
-
-    rc = main(["--input", src, "--output", out, "--job", "clean",
-               "--threshold", "1.0", "--min-tokens", "3",
-               "--snapshot-store", "--rows-per-file", "100"])
-    assert rc == 0
-    m1 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert m1["snapshot_version"] == 1
-    assert m1["rows_out"] == m1["table_rows"] > 0
-
-    rc = main(["--input", src, "--output", out, "--job", "clean",
-               "--threshold", "1.0", "--min-tokens", "3", "--snapshot-store"])
-    assert rc == 0
-    m2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert m2["snapshot_version"] == 2
-    assert m2["table_rows"] == 2 * m1["table_rows"]
-
-    store = SnapshotStore(out)
-    assert store.read(spark, version=1).count() == m1["table_rows"]
-    assert store.read(spark).count() == m2["table_rows"]
-    # sized output: run 1 respected --rows-per-file
-    assert all(e["rows"] <= 100 for e in store._snapshot(1)["files"])
 
 
 _GOPHER_TEXTS = [
@@ -1777,146 +1569,6 @@ def test_drop_duplicate_spans_matches_greedy_reference(spark):
     assert all("Subscribe" not in got[i] for i in (2, 4, 6))
     assert all(f"Document {i} opens" in got[i] for i in range(8))
     assert got[8] == "" and got[9] == "" and got[10] == "Short. Too short."
-
-
-def test_main_entrypoint_encode_job(spark, tmp_path, capsys):
-    """--job encode: clean → vocab → token ids → packed layout, three
-    parquet tables, layout consistent with the token table."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-
-    out = str(tmp_path / "enc")
-    assert main([
-        "--synthesize", "2000", "--job", "encode", "--output", out,
-        "--vocab-size", "200", "--seq-len", "64", "--n-shards", "4",
-        "--min-tokens", "3",
-    ]) == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["rows_kept"] == 2000 and stats["vocab_size"] == 200
-    assert stats["sequences"] > 0 and stats["shards"] == 4
-
-    vocab = spark.read.parquet(f"{out}/vocab")
-    toks = spark.read.parquet(f"{out}/tokens")
-    layout = spark.read.parquet(f"{out}/layout")
-    assert vocab.count() == 200
-    assert toks.count() == layout.count() == 2000
-    # every id is in-vocab or the unk marker
-    mx = vocab.agg(F.max("id")).first()[0]
-    bad = toks.filter(
-        F.exists("token_ids", lambda x: (x < -1) | (x > F.lit(mx)))
-    ).count()
-    assert bad == 0
-    # layout spans are consistent: end - start == n_ids per doc
-    j = toks.join(layout, "doc_id")
-    off = j.filter(F.col("end_tok") - F.col("start_tok") != F.col("n_ids")).count()
-    assert off == 0
-
-
-def test_encode_job_redact_pii_scrubs_training_tokens(spark, tmp_path, capsys):
-    """--redact-pii on the encode job must make the REDACTED text the
-    training text: the vocab/token tables a model trains on may not
-    contain fragments of the raw email — carrying a text_clean column
-    along while packing raw text would silently break the flag."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-
-    rows = [
-        (
-            f"http://ex.com/{i}",
-            "write to alice.secretperson77@corp.example.com for the "
-            "quarterly report and the full minutes of the meeting "
-            f"number {i}",
-        )
-        for i in range(30)
-    ]
-    src = str(tmp_path / "pii_pages")
-    spark.createDataFrame(rows, "url string, text string").withColumn(
-        "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-    ).write.parquet(src)
-
-    out = str(tmp_path / "enc_redacted")
-    assert main([
-        "--input", src, "--job", "encode", "--output", out,
-        "--redact-pii", "--vocab-size", "100", "--seq-len", "32",
-        "--n-shards", "2", "--min-tokens", "3",
-    ]) == 0
-    capsys.readouterr()
-    vocab = spark.read.parquet(f"{out}/vocab").toPandas()
-    leaked = [t for t in vocab["token"] if "secretperson77" in t]
-    assert leaked == [], f"raw email fragments reached the vocab: {leaked}"
-    assert "email" in set(vocab["token"])  # the <EMAIL> token's word form
-
-
-def test_main_entrypoint_pretrain_job(spark, tmp_path, capsys):
-    """--job pretrain: clean → Arrow char-n-gram language routing →
-    α-temperature rebalance → vocab → token ids → packed layout.  The
-    composed one-command recipe; routing keeps only --langs, the mix
-    rebalances to --mix-total, and the four parquet tables stay
-    mutually consistent."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-    from verde_spark.functions.langid import LANG_SEEDS
-
-    rows = []
-    for lang, n in (("en", 40), ("fr", 20), ("de", 10), ("es", 5)):
-        rows += [
-            (f"http://{lang}.example.com/{i}", LANG_SEEDS[lang] + f" doc {i}")
-            for i in range(n)
-        ]
-    rows += [(f"http://und.example.com/{i}", "zz zz zz zz") for i in range(3)]
-    src = str(tmp_path / "pages_multi")
-    spark.createDataFrame(rows, "url string, text string").withColumn(
-        "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-    ).write.parquet(src)
-
-    out = str(tmp_path / "pre")
-    rc = main([
-        "--input", src, "--job", "pretrain", "--output", out,
-        "--langs", "en,fr", "--vocab-size", "150", "--seq-len", "64",
-        "--n-shards", "2", "--min-tokens", "3",
-    ])
-    assert rc == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # routing: de/es/und dropped, en/fr kept in full
-    assert stats["per_lang"] == {"en": 40, "fr": 20}
-    assert stats["rows_routed"] == 60 and stats["vocab_size"] == 150
-    assert stats["sequences"] > 0 and stats["shards"] == 2
-
-    toks = spark.read.parquet(f"{out}/tokens")
-    layout = spark.read.parquet(f"{out}/layout")
-    assert toks.count() == layout.count() == 60
-    assert set(
-        r["lang"] for r in toks.select("lang").distinct().collect()
-    ) == {"en", "fr"}
-    # layout spans are consistent: end - start == n_ids per doc
-    j = toks.join(layout, "doc_id")
-    assert j.filter(
-        F.col("end_tok") - F.col("start_tok") != F.col("n_ids")
-    ).count() == 0
-
-    # α=0 (uniform) rebalance to 30 docs: quotas clamp to populations,
-    # so each kept language lands at 15 (both have >= 15 docs)
-    out2 = str(tmp_path / "pre_mix")
-    rc = main([
-        "--input", src, "--job", "pretrain", "--output", out2,
-        "--langs", "en,fr", "--mix-total", "30", "--mix-alpha", "0.0",
-        "--vocab-size", "150", "--seq-len", "64", "--n-shards", "2",
-        "--min-tokens", "3",
-    ])
-    assert rc == 0
-    stats2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats2["rows_routed"] == 30
-    assert set(stats2["per_lang"]) == {"en", "fr"}
-    assert all(5 <= n <= 25 for n in stats2["per_lang"].values())
 
 
 # -- incremental dedup vs a prior snapshot --------------------------------

@@ -1,7 +1,9 @@
 """Local stand-in for the driver's correctness gate.
 
 Runs every ``queries()`` entry from ``__spark_entry__`` against its
-``oracle_sql()`` DuckDB twin at sf0.01 and compares row count, schema
+``oracle_sql()`` DuckDB twin at sf0.01, and then every ``corpus_queries()``
+entry (the text-corpus rows outside the driver registry) against its
+``corpus_oracle_sql()`` twin, and compares row count, schema
 (column names, sorted) and values with driver-level strictness: rows are
 sorted by all columns, columns sorted by name, and each value compared via
 ``repr`` after float64 normalization — so ``-0.0`` vs ``0.0`` and last-ulp
@@ -72,13 +74,11 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    args = [a for a in sys.argv[1:] if a != "--only"]
-    include_retired = "--retired" in args
-    only = set(a for a in args if a != "--retired")
+    only = set(a for a in sys.argv[1:] if a != "--only")
 
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]"
         )
         .appName("verde_spark-correctness")
         .config("spark.sql.shuffle.partitions", "8")
@@ -97,11 +97,8 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
             )
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    if include_retired:
-        qs.update(entry.retired_queries())
-        oracles.update(entry.retired_oracle_sql())
+    qs = {**entry.queries(), **entry.corpus_queries()}
+    oracles = {**entry.oracle_sql(), **entry.corpus_oracle_sql()}
     results: dict[str, dict] = {}
     failed = []
     for name, fn in qs.items():

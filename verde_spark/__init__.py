@@ -4,14 +4,20 @@ A from-scratch distributed re-expression of the capabilities of
 fatiando/verde (reference: /root/reference, BSD-3): block aggregation
 (BlockReduce/BlockMean), biharmonic-spline and kNN gridding, region
 predicates and masks, blocked train/test splitting and cross-validation —
-plus the web-scale layer (hierarchical cell index, geotag extraction,
-dedup / similarity / text-quality operators) needed to run the same
-pipelines over Common-Crawl-style page tables at 10^12-row scale.
+plus the page-table front end (geotag extraction, byte-identical text
+extraction, canonical-url dedup, hierarchical cell index, salting and
+resumable per-tile checkpoints) needed to run the same pipelines over
+Common-Crawl-style page tables at 10^12-row scale.
 
 Design: everything is a DataFrame-in / DataFrame-out operator built on
 pyspark.sql builtin expressions (Catalyst-optimizable, whole-stage
 codegen); NumPy enters only inside Arrow-vectorized pandas UDFs for the
 dense per-tile solves. No RDDs, no per-row Python.
+
+The package namespace holds only the gridding path.  The text-corpus
+modules still in the tree are being deleted and are not part of the
+package's API; ``import verde_spark`` does not load them, so no Python
+worker that unpickles a gridding UDF imports them.
 """
 
 from .geometry import (
@@ -53,96 +59,11 @@ from .operators.splinecv import SplineCV
 from .operators.polygons import point_in_polygon, polygon_join, rasterize, zonal_stats
 from .functions.extract import extract_text, reference_extract_text
 from .functions.urls import canonical_url, dedup_url, domain_of, top_domains
-from .functions.pii import pii_counts, redact_pii, reference_redact_pii
-from .functions.text import passes_c4, passes_gopher
-from .operators.decontam import contamination_stats, decontaminate
-from .operators.dedup import drop_duplicate_paragraphs, drop_duplicate_spans
-from .operators.sampling import cap_per_domain
-from .operators.packing import pack_sequences, packing_stats
-from .operators.search import bm25_scores, bm25_topk
-from .operators.mixing import (
-    perplexity_buckets,
-    repeat_weighted,
-    sample_to_mix,
-    temperature_mix,
-    temperature_targets,
-)
-from .operators.bloom import (
-    bloom_might_contain,
-    bloom_parameters,
-    build_bloom,
-)
-from .functions.normalize import (
-    normalize_text,
-    normalized_fingerprint,
-)
-from .functions.vocab import build_vocab, encode_tokens
-from .functions.bpe import EXAMPLE_BPE, BpeModel, train_bpe
-from .operators.quality import (
-    EXAMPLE_QUALITY,
-    QualityClassifier,
-    fit_quality_classifier,
-)
-from .operators.dedup import (
-    novel_docs,
-    seen_hashes,
-    semantic_dedup,
-    semantic_dup_pairs,
-)
-from .operators.crawl import crawl_schedule
-from .operators.clustering import kmeans_fit
-from .functions.charlm import ENGLISH_LM, perplexity_expr, train_char_lm
-from .sources.warc import read_warc, split_warc_records
-from .pipelines import clean_corpus, corpus_report
-from .operators.linkgraph import (
-    extract_anchor_texts,
-    extract_links,
-    host_graph,
-    pagerank,
-    top_anchor_texts,
-)
-from .operators.crawl import (
-    filter_blocklist,
-    meta_robots,
-    reference_meta_robots,
-    reference_robots_allowed,
-    reference_robots_crawl_delay,
-    reference_robots_rules,
-    reference_robots_sitemaps,
-    reference_sitemap_entries,
-    robots_allowed_expr,
-    robots_crawl_delay,
-    robots_filter,
-    robots_matchable,
-    robots_rules,
-    robots_sitemaps,
-    robots_txt_filter,
-    robots_txt_rules,
-    sitemap_entries,
-    sitemap_urls,
-)
-from .operators.dsir import (
-    DsirModel,
-    bucket_counts,
-    dsir_bucket_ids,
-    dsir_resample,
-    dsir_weight_udf,
-    fit_dsir,
-    fit_dsir_python,
-)
-from .functions.tfidf import (
-    TfidfModel,
-    fit_tfidf,
-    fit_tfidf_python,
-    sparse_cosine,
-    tfidf_topk,
-)
 from .operators.projections import project_grid, project_points
 from .checkpoint import TileCheckpoint, run_resumable
 from .operators.windows import expanding_window, rolling_window
 from .operators.neighbors import median_distance
 from .sources.grid_io import grid_to_table, load_surfer, table_to_grid
-from .sources.snapshots import SnapshotStore
 from .utils import maxabs, minmax
 from . import datasets, synthetic
 
@@ -176,90 +97,10 @@ __all__ = [
     "Cubic",
     "Linear",
     "canonical_url",
-    "cap_per_domain",
-    "drop_duplicate_paragraphs",
-    "drop_duplicate_spans",
-    "passes_c4",
-    "passes_gopher",
-    "pack_sequences",
-    "packing_stats",
-    "bm25_scores",
-    "bm25_topk",
-    "repeat_weighted",
-    "sample_to_mix",
-    "perplexity_buckets",
-    "temperature_mix",
-    "temperature_targets",
-    "bloom_parameters",
-    "build_bloom",
-    "bloom_might_contain",
-    "normalize_text",
-    "normalized_fingerprint",
-    "build_vocab",
-    "encode_tokens",
-    "train_bpe",
-    "BpeModel",
-    "EXAMPLE_BPE",
-    "QualityClassifier",
-    "fit_quality_classifier",
-    "EXAMPLE_QUALITY",
-    "novel_docs",
-    "seen_hashes",
-    "semantic_dedup",
-    "semantic_dup_pairs",
-    "crawl_schedule",
-    "kmeans_fit",
-    "ENGLISH_LM",
-    "perplexity_expr",
-    "train_char_lm",
-    "read_warc",
-    "split_warc_records",
-    "clean_corpus",
-    "corpus_report",
-    "contamination_stats",
-    "decontaminate",
     "dedup_url",
     "domain_of",
-    "pii_counts",
-    "redact_pii",
-    "reference_redact_pii",
-    "host_graph",
-    "extract_anchor_texts",
-    "extract_links",
-    "filter_blocklist",
-    "meta_robots",
-    "reference_meta_robots",
-    "robots_filter",
-    "reference_robots_allowed",
-    "reference_robots_rules",
-    "robots_allowed_expr",
-    "robots_matchable",
-    "robots_rules",
-    "robots_txt_filter",
-    "robots_txt_rules",
-    "DsirModel",
-    "TfidfModel",
-    "fit_tfidf",
-    "fit_tfidf_python",
-    "sparse_cosine",
-    "tfidf_topk",
-    "bucket_counts",
-    "dsir_bucket_ids",
-    "dsir_resample",
-    "dsir_weight_udf",
-    "fit_dsir",
-    "fit_dsir_python",
-    "reference_robots_crawl_delay",
-    "reference_robots_sitemaps",
-    "reference_sitemap_entries",
-    "robots_crawl_delay",
-    "robots_sitemaps",
-    "sitemap_entries",
-    "sitemap_urls",
-    "top_anchor_texts",
     "extract_text",
     "point_in_polygon",
-    "pagerank",
     "polygon_join",
     "rasterize",
     "top_domains",
@@ -269,7 +110,6 @@ __all__ = [
     "Spline",
     "SplineCV",
     "TileCheckpoint",
-    "SnapshotStore",
     "Trend",
     "Vector",
     "VectorSpline2D",

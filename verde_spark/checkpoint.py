@@ -16,18 +16,31 @@ tile over time") are just Spark SQL.
 from __future__ import annotations
 
 import datetime
-import json
 import os
 import time
 import uuid
 from typing import Callable, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
+SCHEMA_DIR = "_schema"
+
+
+def _read_parquet(spark: SparkSession, path: str, condition: str) -> Optional[DataFrame]:
+    """``spark.read.parquet(path)``, or None when the read fails with the
+    error ``condition``; every other failure (a corrupt part file, an IO
+    error) propagates."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != condition:
+            raise
+        return None
 
 
 class TileCheckpoint:
@@ -49,10 +62,8 @@ class TileCheckpoint:
     # -- reading ---------------------------------------------------------------
 
     def manifest(self, spark: SparkSession) -> Optional[DataFrame]:
-        try:
-            return spark.read.parquet(self.manifest_path)
-        except Exception:
-            return None
+        """The manifest table, or None before the first manifest append."""
+        return _read_parquet(spark, self.manifest_path, "PATH_NOT_FOUND")
 
     def completed_tiles(self, spark: SparkSession) -> DataFrame:
         """Distinct tile ids marked ok in the manifest (empty DF if none)."""
@@ -80,16 +91,12 @@ class TileCheckpoint:
         resume cannot surface duplicated rows (ADVICE r2).  ``attempt`` is
         a hive partition column, so the exclusion prunes whole directories.
         """
-        try:
-            out = spark.read.parquet(self.data_path)
-        except Exception:
-            # an all-empty-output run writes manifest rows but no
-            # parquet files (zero rows emit no schema) — fall back to
-            # the schema snapshot every write() persists
-            schema_file = os.path.join(self.path, "_schema.json")
-            with open(schema_file) as fh:
-                schema = T.StructType.fromJson(json.load(fh))
-            return spark.createDataFrame([], schema)
+        # an all-empty-output run writes manifest rows but no parquet
+        # data files (zero rows emit no schema) — fall back to the schema
+        # snapshot that write() persists for an empty result
+        out = _read_parquet(spark, self.data_path, "UNABLE_TO_INFER_SCHEMA")
+        if out is None:
+            return spark.read.parquet(os.path.join(self.path, SCHEMA_DIR))
         man = self.manifest(spark)
         if man is None:
             # orphan-attempt-only checkpoint: data was appended but the
@@ -134,11 +141,6 @@ class TileCheckpoint:
                 .mode("append")
                 .parquet(os.path.join(self.data_path, f"attempt={attempt}"))
             )
-            # schema snapshot: an all-empty result writes no parquet
-            # files, so load() needs this to build the zero-row frame
-            os.makedirs(self.path, exist_ok=True)
-            with open(os.path.join(self.path, "_schema.json"), "w") as fh:
-                json.dump(json.loads(result.schema.json()), fh)
             duration = time.time() - t0
             hash_cols = [c for c in result.columns if c != self.tile_col]
             stats = result.groupBy(F.col(self.tile_col).alias("tile")).agg(
@@ -172,6 +174,13 @@ class TileCheckpoint:
             stat_rows = stats.select(
                 "tile", "rows_in", "rows_out", "checksum"
             ).collect()
+            if not any(r["rows_out"] for r in stat_rows):
+                # schema snapshot: an all-empty result writes no parquet
+                # files, so load() needs this to build the zero-row frame;
+                # written before the manifest rows that commit the attempt
+                spark.createDataFrame([], result.schema).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(self.path, SCHEMA_DIR))
             ts = datetime.datetime.now(datetime.timezone.utc)
             manifest = spark.createDataFrame(
                 [

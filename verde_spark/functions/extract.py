@@ -34,7 +34,7 @@ agree on these, so the driver's DuckDB oracle replays the exact chain.
 
 Reference context: fatiando/verde has no text layer (geospatial library);
 this module exists for the web-text payload of the graft.  The geotag
-functions downstream (``functions/text.py``) consume the extracted text.
+functions downstream (``sources/pages.py``) consume the extracted text.
 """
 
 from __future__ import annotations

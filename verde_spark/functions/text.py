@@ -1,5 +1,6 @@
-"""Text-layer functions for the web-page table: geotag extraction,
-language-ID, quality scoring, token counting, fingerprinting.
+"""Text-layer functions for the web-page table: language-ID, quality
+scoring, token counting, fingerprinting.  The geotag parse lives with
+the page table in ``sources/pages.py``.
 
 Everything here is either a builtin column expression (regexp/hash —
 JVM-side, codegen) or an Arrow-vectorized pandas UDF; never per-row
@@ -12,28 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: geotag embedded in page text by the fixture generator (FIXTURES.md §1):
-#: ``geo:<lat>,<lon>`` with fixed-precision decimals.
-GEO_PATTERN = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
-
-
-def geotag_lat(text: Column | str = "text") -> Column:
-    text = F.col(text) if isinstance(text, str) else text
-    # try_cast: regexp_extract yields '' on no match (null under ANSI cast)
-    return F.regexp_extract(text, GEO_PATTERN, 1).try_cast("double")
-
-
-def geotag_lon(text: Column | str = "text") -> Column:
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract(text, GEO_PATTERN, 2).try_cast("double")
-
-
-def geotag_sql(col: str, group: int) -> str:
-    """DuckDB SQL equivalent of the geotag extraction (oracle parity)."""
-    return (
-        f"TRY_CAST(regexp_extract({col}, 'geo:(-?\\d+\\.\\d+),(-?\\d+\\.\\d+)', {group}) AS DOUBLE)"
-    )
 
 
 def token_count(text: Column | str = "text") -> Column:

@@ -339,6 +339,11 @@ class KFoldRows:
                     f"needs a numeric/temporal index_col for range "
                     f"chunking; got {df.schema[idx].dataType.simpleString()}"
                 )
+            # duplicate ids have no defined order among themselves, so
+            # their fold membership would depend on the shuffle; the exact
+            # path rejects them, and so does this one
+            if not synthetic and df.select(idx).distinct().count() != n:
+                raise ValueError(f"index_col {idx!r} is not unique")
             k = self.n_splits
             nb = 64
             probs = [i / nb for i in range(1, nb)]

@@ -37,9 +37,14 @@ def with_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "salt") -> DataF
     DIFFERENT salts than the first attempt, and reducers that fetched a
     mix of attempt outputs silently double-count or drop rows (the
     SPARK-23207 failure class).  Content-hashing keeps retries
-    bit-identical; fully duplicate rows sharing a salt only concentrates
-    load in the degenerate all-identical-values case and never affects
-    correctness."""
+    bit-identical and never affects correctness.
+
+    Degradation: rows that are identical in every column share one salt,
+    so a hot key spreads over at most as many salts as it has distinct
+    rows.  A hot key whose other columns have low cardinality (say, a
+    value column with a handful of levels and no row id) stays
+    concentrated on those few salts; add a distinguishing column such as
+    a row id before salting when that matters."""
     h = F.xxhash64(*[F.col(c) for c in df.columns])
     return df.withColumn(salt_col, F.pmod(h, F.lit(n_salts)).cast("int"))
 

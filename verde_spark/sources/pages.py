@@ -20,12 +20,27 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geometry import check_region
 
 LANGS = ("en", "de", "fr", "pt", "es")
+
+#: geotag embedded in page text by the fixture generator (FIXTURES.md §1):
+#: ``geo:<lat>,<lon>`` with fixed-precision decimals.
+GEO_PATTERN = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
+
+
+def geotag_lat(text: Column | str = "text") -> Column:
+    text = F.col(text) if isinstance(text, str) else text
+    # try_cast: regexp_extract yields '' on no match (null under ANSI cast)
+    return F.regexp_extract(text, GEO_PATTERN, 1).try_cast("double")
+
+
+def geotag_lon(text: Column | str = "text") -> Column:
+    text = F.col(text) if isinstance(text, str) else text
+    return F.regexp_extract(text, GEO_PATTERN, 2).try_cast("double")
 
 
 def _unit_uniform(i, salt: int):
@@ -116,8 +131,6 @@ def geotagged(pages: DataFrame, from_html: bool = False) -> DataFrame:
     test_extract) makes the two modes provably equivalent on a
     well-formed page table.
     """
-    from ..functions.text import geotag_lat, geotag_lon
-
     if from_html:
         from ..functions.extract import extract_text
 

@@ -47,7 +47,8 @@ def streaming_cell_blockmean(
     and streaming results agree on identical input.
     """
     from .functions.cells import cell_encode
-    from .functions.text import geotag_lat, geotag_lon, quality_score
+    from .functions.text import quality_score
+    from .sources.pages import geotag_lat, geotag_lon
 
     tagged = pages.withColumn("lon", geotag_lon("text")).withColumn("lat", geotag_lat("text"))
     value = F.col(value_col) if value_col else quality_score("text")
@@ -325,7 +326,8 @@ def streaming_cell_reservoir(
     import pandas as pd
 
     from .functions.cells import cell_encode
-    from .functions.text import geotag_lat, geotag_lon, quality_score
+    from .functions.text import quality_score
+    from .sources.pages import geotag_lat, geotag_lon
 
     tagged = pages.withColumn("lon", geotag_lon("text")).withColumn("lat", geotag_lat("text"))
     # url null-guard: xxhash64(NULL) = NULL would reach the state fn as
